@@ -1,7 +1,7 @@
 """Dump full `.explain("formatted")` output for every bench query into
 plans/r13/<key>_{before,after}.txt — the optimization-round evidence files.
 
-Usage: python scripts/plan_dump_r12.py {before|after} [key ...]
+Usage: python scripts/plan_dump_r13.py {before|after} [key ...]
 
 With no keys, dumps the whole HEADLINE + TIER2 set. Plans are captured at
 sf0.1 (the bench scale) so AQE thresholds and statistics match what the

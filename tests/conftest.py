@@ -52,7 +52,9 @@ def registry_frames(spark):
     # `_metadata` while ops_wave17 had the session on the V2 reader).
     # Keys defined in conf-mutating modules build SERIALLY, after the
     # pool. (drain()'s shuffle.partitions toggle stays in the pool: the
-    # partition count is never analysis- or result-relevant.)
+    # partition count is never analysis- or result-relevant, and
+    # session.scoped_conf locks it and restores it as soon as the query
+    # has started.)
     _pkg = "training_feed_kinesis_spark.operators."
     conf_mutators = {
         _pkg + m

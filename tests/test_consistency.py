@@ -5,6 +5,11 @@ the DuckDB oracles (engine-vs-engine there, operator-vs-operator here).
 
 from __future__ import annotations
 
+import collections
+import contextlib
+import threading
+import time
+
 import pytest
 
 from .conftest import SF_DIR
@@ -12,6 +17,19 @@ from .conftest import SF_DIR
 
 def _rows(df, *cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def _tumbling(spark):
+    from pyspark.sql import functions as F
+
+    from training_feed_kinesis_spark.streaming.replay import replay_stream
+
+    return (
+        replay_stream(spark, SF_DIR, "ordered")
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
 
 
 @pytest.fixture(scope="module")
@@ -145,19 +163,12 @@ def test_rocksdb_state_store_matches_default(spark, registry):
     spills off-heap/disk instead of living in executor heap, which is what
     makes 100 TB streaming state survivable). Provider choice is pure conf:
     no operator code changes."""
-    from training_feed_kinesis_spark.streaming.replay import drain, replay_stream
-    from pyspark.sql import functions as F
-
-    def tumbling():
-        stream = replay_stream(spark, SF_DIR, "ordered")
-        return (
-            stream.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
+    from training_feed_kinesis_spark.streaming.replay import drain
 
     baseline = _rows(
-        drain(tumbling(), "complete").select("event_type", "n"), "event_type", "n"
+        drain(_tumbling(spark), "complete").select("event_type", "n"),
+        "event_type",
+        "n",
     )
     conf = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(conf, None)
@@ -167,7 +178,9 @@ def test_rocksdb_state_store_matches_default(spark, registry):
     )
     try:
         rocks = _rows(
-            drain(tumbling(), "complete").select("event_type", "n"), "event_type", "n"
+            drain(_tumbling(spark), "complete").select("event_type", "n"),
+            "event_type",
+            "n",
         )
     finally:
         if prev is None:
@@ -285,6 +298,102 @@ def test_checkpoint_recovery_processes_each_file_once(spark):
     assert out.count() == n_total_events  # resume processed ONLY the new file
     # exactly once: no event_id appears twice across the two drains
     assert out.groupBy("event_id").count().filter(F.col("count") > 1).count() == 0
+
+
+@contextlib.contextmanager
+def _progress_log(spark):
+    """Collect every StreamingQueryProgress of the queries that run in the
+    body, by query name. Listener events arrive asynchronously, so on exit
+    wait for each seen query's termination event before handing over."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Log(StreamingQueryListener):
+        def __init__(self):
+            self.by_name = collections.defaultdict(list)
+            self.ids = set()
+            self.done = set()
+
+        def onQueryStarted(self, event):
+            self.ids.add(str(event.id))
+
+        def onQueryProgress(self, event):
+            self.by_name[event.progress.name].append(event.progress)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done.add(str(event.id))
+
+    log = Log()
+    spark.streams.addListener(log)
+    try:
+        yield log
+        deadline = time.monotonic() + 30
+        while not log.ids <= log.done and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert log.ids and log.ids <= log.done, (log.ids, log.done)
+    finally:
+        spark.streams.removeListener(log)
+
+
+def test_stream_tumbling_drains_in_one_wave_of_state_partitions(spark, registry):
+    """The engine session checkpoints through the FileSystem-based manager,
+    and a warm stream_tumbling drain keeps every replay file as its own
+    data batch while running min(8, defaultParallelism) state partitions
+    (one task wave per micro-batch)."""
+    from training_feed_kinesis_spark.streaming.replay import N_REPLAY_FILES
+
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    registry["stream_tumbling"].fn(spark, SF_DIR).count()  # warm
+    with _progress_log(spark) as log:
+        n_rows = registry["stream_tumbling"].fn(spark, SF_DIR).count()
+    assert n_rows > 0
+    [progress] = log.by_name.values()
+    data_batches = [p for p in progress if p.numInputRows > 0]
+    assert len(data_batches) == N_REPLAY_FILES
+    want = min(8, spark.sparkContext.defaultParallelism)
+    for p in progress:
+        [state] = p.stateOperators
+        assert state.numShufflePartitions == want, state.json
+        assert state.numStateStoreInstances == want, state.json
+
+
+def test_concurrent_drains_scope_their_own_partitions(spark):
+    """Two drains started together from two threads: each query runs at its
+    own scoped partition count, the results agree, and the session's
+    shuffle-partition conf is back at its value when both are done."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from training_feed_kinesis_spark.streaming.replay import drain
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    parts = (2, 3)
+    ready = threading.Barrier(len(parts), timeout=60)
+
+    def run(n):
+        agg = _tumbling(spark)
+        ready.wait()
+        return _rows(
+            drain(agg, "complete", state_partitions=n).select("event_type", "n"),
+            "event_type",
+            "n",
+        )
+
+    with _progress_log(spark) as log:
+        with ThreadPoolExecutor(max_workers=len(parts)) as pool:
+            results = list(pool.map(run, parts))
+    assert spark.conf.get(key) == before
+    assert results[0] == results[1] and results[0]
+    scoped = sorted(
+        sorted({s.numShufflePartitions for p in progress for s in p.stateOperators})
+        for progress in log.by_name.values()
+    )
+    assert scoped == [[2], [3]], scoped
 
 
 def test_stream_cdc_merge_equals_batch_compaction(spark, registry):

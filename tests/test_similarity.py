@@ -151,3 +151,58 @@ def test_sim_lsh_recall_floor_on_planted_pairs(spark):
     got = {(r.a_id, r.b_id) for r in llm_sim_lsh(spark, d).collect()}
     recall = len(got & true_pairs) / len(true_pairs)
     assert recall >= 0.9, f"LSH recall {recall:.2f} over {len(true_pairs)} pairs"
+
+
+def test_embed_stats_rounds_like_the_oracle_incl_signed_zero(spark, tmp_path):
+    """llm_embed_stats must round a centroid mean in (-0.00005, 0) to
+    -0.0, as the DuckDB oracle's ROUND(x, 4) does (Spark's own round gives
+    0.0 there). Tiny fixture with such cells, a positive tiny mean and a
+    few ordinary values; every cell compared by full-precision repr."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from training_feed_kinesis_spark.registry import load_all
+
+    def vec(head):
+        return head + [0.123456 * (i % 7 - 3) for i in range(64 - len(head))]
+
+    rows = [
+        # label 0, pos 1: mean (-1e-4 + 3.5e-5) / 2 ≈ -3.25e-05 → -0.0
+        (1, vec([-1e-4, 3e-5, 0.25]), 0),
+        (2, vec([3.5e-5, 1e-5, 0.75]), 0),
+        # label 1, pos 1: -4e-05 → -0.0; pos 2: +2e-05 → 0.0
+        (3, vec([-4e-5, 2e-5, -0.33335]), 1),
+    ]
+    d = tmp_path / "emb_signed_zero"
+    d.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+                "embedding": pa.array([r[1] for r in rows], pa.list_(pa.float32())),
+                "label": pa.array([r[2] for r in rows], pa.int32()),
+            }
+        ),
+        d / "embeddings.parquet",
+    )
+    spec = load_all()["llm_embed_stats"]
+    got = sorted(
+        (r["label"], r["pos"], repr(r["centroid_val"]), r["n_vectors"])
+        for r in spec.fn(spark, str(d)).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM"
+        f" read_parquet('{d}/embeddings.parquet')"
+    )
+    want = sorted(
+        (label, pos, repr(val), n)
+        for label, pos, val, n in con.execute(
+            f"SELECT label, pos, centroid_val, n_vectors FROM ({spec.oracle})"
+        ).fetchall()
+    )
+    con.close()
+    assert got == want
+    assert (0, 1, "-0.0", 2) in got and (1, 1, "-0.0", 1) in got, got[:4]
+    assert (1, 2, "0.0", 1) in got

@@ -413,10 +413,20 @@ def llm_embed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded = em.select(
         "label", F.posexplode(F.col("embedding").cast("array<double>")).alias("pos0", "val")
     )
+    # ROUND to 4 dp spelled as DuckDB computes it, round(x * 1e4) / 1e4,
+    # with the sign of zero carried over from x. Spark's round(x, 4) goes
+    # through BigDecimal, which has no -0.0: a mean in (-0.00005, 0) came
+    # out 0.0 where the oracle gives -0.0 (four (label, pos) cells at
+    # sf0.1). abs(r) * signum(x) is r for r != 0 (r has x's sign) and a
+    # zero of x's sign otherwise.
+    mean = F.avg("val")
+    rounded = (
+        F.abs(F.round(mean * F.lit(10000.0), 0)) * F.signum(mean) / F.lit(10000.0)
+    )
     return (
         exploded.groupBy("label", (F.col("pos0") + 1).alias("pos"))
         .agg(
-            F.round(F.avg("val"), 4).alias("centroid_val"),
+            rounded.alias("centroid_val"),
             F.count(F.lit(1)).alias("n_vectors"),
         )
     )

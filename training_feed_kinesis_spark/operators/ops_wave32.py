@@ -109,7 +109,8 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: progress objects are driver-side metadata; the reconciliation
     costs nothing data-sized."""
     from ..operators.scans import scratch_dir
-    from ..streaming.replay import replay_stream
+    from ..session import scoped_conf
+    from ..streaming.replay import one_wave_partitions, replay_stream
 
     stream = replay_stream(spark, sf_dir, "ordered", sentinel=True)
     agg = (
@@ -118,12 +119,11 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     name = f"tfk_progress_{next(_qc)}"
-    # same state-partition right-sizing as replay.drain(): the stateful
-    # partition count is fixed at query start and each micro-batch commits
-    # one state delta per partition — 200 defaults are pure overhead here
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # same state-partition right-sizing and conf scope as replay.drain():
+    # the stateful partition count is fixed at query start and each
+    # micro-batch commits one state delta per partition
+    parts = {"spark.sql.shuffle.partitions": one_wave_partitions(spark)}
+    with scoped_conf(spark, parts):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -132,12 +132,7 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-    finally:
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
+    q.awaitTermination()
     # recentProgress retains every micro-batch of this short run; sum the
     # source-reported input rows — the number a dashboard reconciles
     total_in = sum(p["numInputRows"] for p in q.recentProgress)

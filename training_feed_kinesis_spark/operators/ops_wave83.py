@@ -151,12 +151,12 @@ def stream_watermark_gap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    from ..streaming.replay import _ckpt_dir
+    from ..session import scoped_conf
+    from ..streaming.replay import _ckpt_dir, one_wave_partitions
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     name = f"tfk_wm_gap_{abs(hash(sf_dir)) % 10_000}"
-    try:
+    parts = {"spark.sql.shuffle.partitions": one_wave_partitions(spark)}
+    with scoped_conf(spark, parts):  # read at start(), as in replay.drain()
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -165,11 +165,8 @@ def stream_watermark_gap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-        progresses = list(q.recentProgress)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
+    progresses = list(q.recentProgress)
     input_rows = sum(p["numInputRows"] for p in progresses)
     dropped = sum(
         p["stateOperators"][0]["numRowsDroppedByWatermark"]

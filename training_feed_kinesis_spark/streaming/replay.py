@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.scans import scratch_dir
+from ..session import scoped_conf
 from ..tables import load_table
 
 N_REPLAY_FILES = 4
@@ -219,21 +220,15 @@ def _with_sentinel_locked(spark: SparkSession, src: str) -> str:
 
 
 def _ckpt_dir() -> str:
-    """Checkpoint scratch: prefer tmpfs (/dev/shm) — checkpoint WAL/state
-    commits are fsync-heavy and throwaway in this harness. Production
-    deployments pass a durable `checkpoint` path instead."""
-    import tempfile
+    """Fresh checkpoint dir under the process scratch, removed at exit.
+    Production deployments pass a durable `checkpoint` path instead.
 
-    from ..operators.scans import track_scratch
-
-    shm = "/dev/shm/tfk_ckpt"
-    try:
-        os.makedirs(shm, exist_ok=True)
-        # tmpfs: throwaway WAL/state commits MUST be reclaimed at exit or
-        # repeated invocations grow RAM-backed storage (ADVICE r12)
-        return track_scratch(tempfile.mkdtemp(prefix="ckpt_", dir=shm))
-    except OSError:
-        return scratch_dir("ckpt_")
+    Disk, not tmpfs: with the FileSystem-based checkpoint manager (see
+    session.build_session), warm `stream_tumbling` drains at sf0.1 on 4
+    cores took a median 1.59 s with /dev/shm checkpoints and 1.59 s on
+    disk (8 interleaved drains each), so one location and no RAM-backed
+    growth."""
+    return scratch_dir("ckpt_")
 
 
 # Final StreamingQueryProgress of the most recent drain() — tests assert
@@ -243,6 +238,12 @@ LAST_PROGRESS: dict | None = None
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+
+
+def one_wave_partitions(spark: SparkSession, cap: int = 8) -> str:
+    """State partition count for a replay query: at most ``cap``, and no
+    more than one task wave (``defaultParallelism``)."""
+    return str(min(cap, spark.sparkContext.defaultParallelism))
 
 
 def drain(
@@ -256,36 +257,46 @@ def drain(
     sink; return the materialized batch DataFrame. The memory sink is a
     test/CI harness — production sinks are parquet/foreachBatch.
 
-    ``state_partitions`` right-sizes ``spark.sql.shuffle.partitions`` for the
-    duration of the drain (the stateful-operator partition count is fixed at
-    query start from that conf, and each micro-batch commits one state-store
-    delta PER partition): the replay corpus has O(10³) keys, where 64 state
-    partitions × N batches is pure commit overhead — measured 2.5× slower
-    than 8. On a real cluster state cardinality is huge and the conf comes
-    from cluster tuning, so ``None`` (leave untouched) is the production
-    setting.
+    ``state_partitions`` caps ``spark.sql.shuffle.partitions`` for this
+    query at ``min(state_partitions, defaultParallelism)``. The stateful
+    operator's partition count is fixed at query start from that conf, and
+    each micro-batch runs one state task and commits one state-store delta
+    (plus its checksum sidecar) per partition. The replay corpus has O(10³)
+    keys, so partitions beyond one task wave are pure commit overhead: on
+    4 cores, 8 partitions ran every batch in two waves; capped at the core
+    count each batch runs in one. Together with the FileSystem-based
+    checkpoint manager this took the warm `stream_tumbling` drain at sf0.1
+    on 4 cores from 2.95 s to 1.87 s, and its per-batch state commit from
+    684 ms to 30 ms (same 4 batches, 100,000 rows). Results do not depend
+    on the count. On a real cluster state cardinality is
+    huge and the conf comes from cluster tuning, so ``None`` (leave the
+    session value) is the production setting.
 
     ``rocksdb=True`` runs this query under the RocksDB state-store
     provider (off-heap/on-disk keyed state + changelog checkpointing) —
     the 100 TB posture, where state cardinality outgrows executor heap;
-    the provider is picked up at query start, so a per-drain conf scope
-    is enough and results are identical by construction."""
+    results are identical by construction.
+
+    Both settings are read when the query starts: ``start()`` clones the
+    session and records them in the checkpoint's offset log. So they are
+    scoped with :func:`session.scoped_conf` (one lock, shared with every
+    concurrent drain) around ``start()`` only, and restored before the
+    drain runs; drains in a thread pool do not serialize on each other's
+    micro-batches, and none sees another's temporary values."""
     global LAST_PROGRESS
     spark = df.sparkSession
     name = f"tfk_replay_{next(_qcounter)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    provider_conf = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_conf, None)
+    confs = {}
     if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    if rocksdb:
-        spark.conf.set(provider_conf, ROCKSDB_PROVIDER)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
+        confs["spark.sql.shuffle.partitions"] = one_wave_partitions(
+            spark, state_partitions
         )
-    try:
+    if rocksdb:
+        confs["spark.sql.streaming.stateStore.providerClass"] = ROCKSDB_PROVIDER
+        confs[
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+        ] = "true"
+    with scoped_conf(spark, confs):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -294,14 +305,6 @@ def drain(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-        LAST_PROGRESS = q.lastProgress
-    finally:
-        if state_partitions is not None and prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if rocksdb:
-            if prev_provider is None:
-                spark.conf.unset(provider_conf)
-            else:
-                spark.conf.set(provider_conf, prev_provider)
+    q.awaitTermination()
+    LAST_PROGRESS = q.lastProgress
     return spark.table(name)
